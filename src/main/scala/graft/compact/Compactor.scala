@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
+import graft.route.FanOut
 import graft.schema.BillingSchema
 
 /**
@@ -32,9 +33,15 @@ import graft.schema.BillingSchema
  *     files its own scan is reading (Spark rejects the plan with "Cannot
  *     overwrite a path that is also being read from"). Checkpointing is
  *     executor block storage, so the listed partitions are processed in
- *     batches of `partitionsPerJob` — exposure is bounded to one batch's
- *     worth of blocks regardless of how many partitions were requested
- *     (`--partition all` on a 100 TB table never materializes the table).
+ *     batches of `partitionsPerJob`, and each batch's checkpoint is
+ *     released as soon as its overwrite has finished;
+ *   - the listed tables are compacted concurrently (the reference
+ *     rewrites them one after another, `:374-385`), each table's
+ *     batches in sequence — so at most one batch per table is
+ *     materialized at a time, and exposure is bounded to (tables listed,
+ *     four by default) × `partitionsPerJob` partitions' worth of blocks
+ *     regardless of how many partitions were requested (`--partition all`
+ *     on a 100 TB table never materializes the table).
  */
 class Compactor(
     spark: SparkSession,
@@ -85,9 +92,10 @@ class Compactor(
     * (partition, salt % nFiles(partition)) so every partition in the
     * batch compacts in parallel across the cluster, each into its
     * size-targeted file count, and a single dynamic overwrite replaces
-    * the batch's partitions atomically per job. The batching bounds the
+    * the batch's partitions atomically per job. The tables run
+    * concurrently, each one batch at a time, so the batching bounds the
     * pre-overwrite `localCheckpoint` materialization (block storage) to
-    * `partitionsPerJob` partitions' worth of data at a time — the
+    * `partitionsPerJob` partitions' worth of data per table — the
     * default `yesterday` path is one partition, one job, exactly as
     * before; `all` on a large table is N/8 bounded jobs instead of one
     * table-sized one. The salt is a deterministic full-row hash, so a
@@ -95,48 +103,57 @@ class Compactor(
   def compact(
       tables: Seq[String] = BillingSchema.tableSchemas.keys.toSeq.sorted,
       partitions: Option[Seq[String]] = None): Unit = {
-    val field = BillingSchema.partitionField
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
-      tables.foreach { table =>
-        val sizes = partitionSizes(table)
-        val parts = partitions.getOrElse(sizes.keys.toSeq.sorted)
-        def filesFor(p: String): Int = math.max(1,
-          math.ceil(sizes.getOrElse(p, 0L).toDouble / targetFileBytes).toInt)
-        parts.grouped(partitionsPerJob).foreach { batch =>
-          // SHOW PARTITIONS / the catalog report NULL keys as the Hive
-          // default-partition sentinel; equality would select zero rows
-          val nonNull = batch.filterNot(_ == nullPartition)
-          val predicate = (
-            Option.when(nonNull.nonEmpty)(col(field).isin(nonNull: _*)) ++
-              Option.when(batch.contains(nullPartition))(col(field).isNull)
-          ).reduce(_ || _)
-          val df = spark.table(qualified(table)).where(predicate)
-          // per-partition target file count as a lookup expression
-          val filesExpr = {
-            val m = if (nonNull.isEmpty) lit(1) else
-              coalesce(element_at(
-                map(nonNull.flatMap(p => Seq(lit(p), lit(filesFor(p)))): _*),
-                col(field)), lit(1))
-            when(col(field).isNull, lit(filesFor(nullPartition))).otherwise(m)
-          }
-          val salt = pmod(xxhash64(df.columns.map(col): _*), filesExpr.cast("long"))
-          // explicit partition count = total target files: exactly the
-          // right task count for the rewrite, and AQE won't coalesce the
-          // salted buckets back together (an explicit N disables it)
-          val totalFiles = batch.map(filesFor).sum
-          // materialize before overwriting the files being read, then let
-          // the dynamic overwrite atomically replace only these partitions
-          rewriteHook(df.repartition(totalFiles, col(field), salt)
-            .localCheckpoint())
-            .write.mode("overwrite").insertInto(qualified(table))
-        }
-      }
+      // the tables are independent rewrites: run them concurrently and wait
+      // for every one, so the restore below never runs under an overwrite
+      // that is still being planned (it would then run as a STATIC
+      // overwrite of its whole table)
+      FanOut.awaitAll(tables.map(table => () => compactTable(table, partitions)))
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
         case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      }
+    }
+  }
+
+  /** One table's compaction: its partitions in bounded batches, one
+    * dynamic overwrite job per batch. */
+  private def compactTable(table: String, partitions: Option[Seq[String]]): Unit = {
+    val field = BillingSchema.partitionField
+    val sizes = partitionSizes(table)
+    val parts = partitions.getOrElse(sizes.keys.toSeq.sorted)
+    def filesFor(p: String): Int = math.max(1,
+      math.ceil(sizes.getOrElse(p, 0L).toDouble / targetFileBytes).toInt)
+    parts.grouped(partitionsPerJob).foreach { batch =>
+      // SHOW PARTITIONS / the catalog report NULL keys as the Hive
+      // default-partition sentinel; equality would select zero rows
+      val nonNull = batch.filterNot(_ == nullPartition)
+      val predicate = (
+        Option.when(nonNull.nonEmpty)(col(field).isin(nonNull: _*)) ++
+          Option.when(batch.contains(nullPartition))(col(field).isNull)
+      ).reduce(_ || _)
+      val df = spark.table(qualified(table)).where(predicate)
+      // per-partition target file count as a lookup expression
+      val filesExpr = {
+        val m = if (nonNull.isEmpty) lit(1) else
+          coalesce(element_at(
+            map(nonNull.flatMap(p => Seq(lit(p), lit(filesFor(p)))): _*),
+            col(field)), lit(1))
+        when(col(field).isNull, lit(filesFor(nullPartition))).otherwise(m)
+      }
+      val salt = pmod(xxhash64(df.columns.map(col): _*), filesExpr.cast("long"))
+      // explicit partition count = total target files: exactly the
+      // right task count for the rewrite, and AQE won't coalesce the
+      // salted buckets back together (an explicit N disables it)
+      val totalFiles = batch.map(filesFor).sum
+      // materialize before overwriting the files being read, then let
+      // the dynamic overwrite atomically replace only these partitions;
+      // the checkpoint is released as soon as its overwrite has finished
+      FanOut.localCheckpointed(df.repartition(totalFiles, col(field), salt)) { batchRows =>
+        rewriteHook(batchRows).write.mode("overwrite").insertInto(qualified(table))
       }
     }
   }

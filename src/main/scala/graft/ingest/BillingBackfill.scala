@@ -1,10 +1,9 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.parse.BillingParse
-import graft.route.BillingRouter
+import graft.route.{BillingRouter, FanOut}
 import graft.schema.BillingSchema
 
 /**
@@ -30,12 +29,15 @@ import graft.schema.BillingSchema
  *   - idempotent: re-running the same backfill replaces the same days
  *     with the same rows.
  *
- * Scale notes (100 TB): parse + route are narrow (map-only) over the raw
- * archive's input partitioning; the one shuffle clusters rows by day so
- * each day's overwrite writes one file set (the BillingIngest lesson —
- * without it, tasks × days small files). The slice is localCheckpoint'd
- * once and reused by every per-day insert and the returned count, so the
- * raw archive is read ONCE per backfill, not once per day.
+ * Scale notes (100 TB): this is the live path's write step too
+ * (`FanOut.byDay`): parse is narrow (map-only) over the raw archive's
+ * input partitioning, rows outside `days` are dropped before the one
+ * shuffle, which clusters rows by day so each day's overwrite writes one
+ * file set (the BillingIngest lesson — without it, tasks × days small
+ * files). The clustered rows are localCheckpoint'd once and reused by all
+ * four tables' per-day inserts and the returned counts, so the raw archive
+ * is read ONCE per backfill, not once per table or day; the four tables
+ * are replaced concurrently.
  */
 class BillingBackfill(spark: SparkSession, database: String = "default") {
 
@@ -53,12 +55,10 @@ class BillingBackfill(spark: SparkSession, database: String = "default") {
     require(days.nonEmpty, "backfill requires at least one partition day")
     days.foreach(d => require(DayPattern.matches(d),
       s"not a YYYY-MM-DD partition day: '$d'"))
-    val parsed = BillingParse.parse(raw)
-    BillingRouter.route(parsed).map { case (table, routed) =>
-      val slice = routed
-        .filter(col(BillingSchema.partitionField).isin(days: _*))
-        .repartition(col(BillingSchema.partitionField))
-        .localCheckpoint()
+    // the day filter runs before the exchange, so only requested days are
+    // shuffled and materialized
+    val parsed = BillingParse.parse(raw).filter(BillingRouter.partitionDay.isin(days: _*))
+    FanOut.byDay(parsed) { (table, slice) =>
       val view = s"backfill_${table}_src"
       slice.createOrReplaceTempView(view)
       try {
@@ -71,7 +71,7 @@ class BillingBackfill(spark: SparkSession, database: String = "default") {
         }
       } finally spark.catalog.dropTempView(view)
       spark.catalog.refreshTable(qualified(table))
-      table -> slice.count()
+      slice.count()
     }
   }
 }

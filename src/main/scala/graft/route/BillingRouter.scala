@@ -27,6 +27,9 @@ object BillingRouter {
     Route("storage", col("msgType").isin("store", "restore"), BillingSchema.storageCols),
     Route("remove", col("msgType") === "remove", BillingSchema.removeCols))
 
+  /** A parsed row's day: the `partition_date` value `route` writes. */
+  val partitionDay: Column = substring(col("date"), 1, 10)
+
   /** Split a parsed frame into table-name → DDL-ordered projection with the
     * partition column appended. Filter comes before projection so Catalyst
     * collapses it into the JSON-parse projection and prunes unused fields. */
@@ -34,7 +37,6 @@ object BillingRouter {
     routes.map { r =>
       (tablePrefix + r.table) -> parsed
         .filter(r.predicate)
-        .select(r.columns.map(col) :+
-          substring(col("date"), 1, 10).as(BillingSchema.partitionField): _*)
+        .select(r.columns.map(col) :+ partitionDay.as(BillingSchema.partitionField): _*)
     }.toMap
 }

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.ddl.BillingTables
 import graft.ingest.BillingIngest
@@ -95,5 +96,45 @@ class BillingIngestSpec extends SparkSuite {
     val parts = spark.table(s"$db.transfer")
       .select("partition_date").as[String].collect().sorted
     parts shouldBe Array("2019-07-04", "2024-03-01")
+  }
+
+  test("processBatch writes exactly one file per non-empty (table, day)") {
+    freshTables()
+    val days = Seq("2024-03-01", "2024-03-02", "2024-03-03")
+    // every fixture on every day, four copies each, spread over 4 input
+    // partitions: each input task holds rows of every (table, day)
+    val records = for {
+      copy <- 1 to 4; day <- days; (r, i) <- Fixtures.all.zipWithIndex
+    } yield r.replaceAll("2024-03-0[0-9]", day)
+      .replaceAll("\"pnfsid\":\"[^\"]*\"", "\"pnfsid\":\"" + s"$copy-$day-$i" + "\"")
+    val batch = records.toDF("value").repartition(4)
+    new BillingIngest(spark, batch, db).processBatch(batch, 0L)
+
+    val warehouse = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    for (table <- counts().keys; day <- days) {
+      val dir = java.nio.file.Paths.get(warehouse, s"$db.db", table, s"partition_date=$day")
+      val files = java.nio.file.Files.list(dir).iterator().asScala.toSeq
+        .count(_.getFileName.toString.endsWith(".parquet"))
+      withClue(s"$table/$day: ") { files shouldBe 1 }
+    }
+    counts() shouldBe Map(
+      "transfer" -> 12L, "request" -> 12L, "storage" -> 24L, "remove" -> 12L)
+  }
+
+  test("a failed insert surfaces only after the other three have committed") {
+    freshTables()
+    spark.sql(s"DROP TABLE $db.storage")
+    val batch = Fixtures.all.toDF("value")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val boom = intercept[Exception] {
+      new BillingIngest(spark, batch, db).processBatch(batch, 0L)
+    }
+    boom.getMessage should include("storage")
+    // the exception surfaced: every other insert has already finished
+    Seq("transfer", "request", "remove")
+      .map(t => t -> spark.table(s"$db.$t").count()) shouldBe
+      Seq("transfer" -> 1L, "request" -> 1L, "remove" -> 1L)
+    // and the batch's materialization was released after them
+    (spark.sparkContext.getPersistentRDDs.keySet -- persisted) shouldBe empty
   }
 }

@@ -148,4 +148,39 @@ class CompactorSpec extends SparkSuite {
     parquetFiles("transfer", "2024-03-01").size should be > 1
     spark.table(s"$db.transfer").count() shouldBe 4L
   }
+
+  test("a failed table rewrite surfaces only after the other tables are compacted") {
+    val tables = new BillingTables(spark, db)
+    tables.createDatabase(); tables.dropAll(); tables.createAll()
+    ingestTimes(3, Fixtures.all)
+    val partitionsOf = Seq("transfer" -> "2024-03-01", "request" -> "2024-03-01",
+      "storage" -> "2024-03-02", "remove" -> "2024-03-03")
+    partitionsOf.foreach { case (t, p) => parquetFiles(t, p).size should be > 1 }
+    val transferFiles = parquetFiles("transfer", "2024-03-01").size
+    val counts = partitionsOf.map { case (t, _) => t -> spark.table(s"$db.$t").count() }
+    val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.getOption(overwriteMode)
+
+    // only the transfer table's rewrite crashes ("isP2p" is a transfer
+    // column); the other three are held back on the driver for a moment, so
+    // they are still in flight when the crash happens
+    val boom = intercept[Exception] {
+      new Compactor(spark, db,
+        rewriteHook = df => if (!df.columns.contains("isP2p")) { Thread.sleep(2000); df } else
+          df.withColumn("cellName", org.apache.spark.sql.functions.expr(
+            """CASE WHEN assert_true(false, 'injected crash') IS NULL
+               THEN cellName END""")))
+        .compact()
+    }
+    boom.getMessage should include("injected crash")
+
+    // when the failure surfaces, the three other tables are compacted,
+    // transfer is untouched and the session's overwrite mode is restored
+    partitionsOf.tail.foreach { case (t, p) =>
+      withClue(s"$t/$p: ") { parquetFiles(t, p).size shouldBe 1 }
+    }
+    parquetFiles("transfer", "2024-03-01").size shouldBe transferFiles
+    counts.foreach { case (t, n) => spark.table(s"$db.$t").count() shouldBe n }
+    spark.conf.getOption(overwriteMode) shouldBe prior
+  }
 }
